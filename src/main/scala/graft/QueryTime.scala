@@ -17,10 +17,9 @@ object QueryTime {
     val passes = if (args.length > 1) args(1).toInt else 1
     val spark = SparkSessionFactory.local(32, "graft-query-time")
     spark.sparkContext.setLogLevel("ERROR")
-    // opt-in codec pre-JIT, to measure cold rows the way Verify/Bench
-    // now run them (round 16)
-    if (sys.env.get("GRAFT_PREJIT").contains("1"))
-      graft.operators.Multimodal.preJitCodecs()
+    // pre-JIT the media codecs, so cold rows are measured the way
+    // Verify/Bench run them
+    graft.operators.Multimodal.preJitCodecs()
     val picked = SparkEntry.modules
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
     (1 to passes).foreach { pass =>

@@ -60,14 +60,18 @@ object DirIO {
        catch { case _: java.io.IOException => false })
   }
 
-  def scratchDir(prefix: String): Path = {
+  def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(scratchRoot(), prefix)
+
+  /** The directory [[scratchDir]] creates under: tmpfs's graft-scratch
+    * (swept of stale entries) when usable, java.io.tmpdir otherwise. */
+  def scratchRoot(): Path =
     if (tmpfsUsable()) {
       val root = Files.createDirectories(
         java.nio.file.Paths.get("/dev/shm").resolve("graft-scratch"))
       sweepStale(root)
-      Files.createTempDirectory(root, prefix)
-    } else Files.createTempDirectory(prefix)
-  }
+      root
+    } else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
 
   /** Reap graft-scratch entries older than 6 h (ADVICE r15 #2): crashed
     * runs leak RAM-backed trees the OS never cleans, unlike disk /tmp.

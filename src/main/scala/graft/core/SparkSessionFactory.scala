@@ -46,12 +46,6 @@ object SparkSessionFactory {
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // EXPERIMENT (round 16): size post-shuffle partitions by bytes, not
-      // by the core count — measured per-query before adopting.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY", "64m"))
       // Checkpoint-file checksums OFF for local ephemeral checkpoints
       // (round 16): Spark 4.1 writes-and-awaits a checksum sidecar for
       // EVERY checkpoint file (state deltas, WAL, commits) — jstack

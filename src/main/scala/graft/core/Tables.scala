@@ -31,22 +31,15 @@ object Tables {
     * TIMESTAMP type every downstream query expects; the legacy flag is a
     * no-op for it. `events()` dispatches on the post-read column type.
     *
-    * The legacy conf has no per-read DataFrameReader option, so it is set
-    * on the session only for the duration of this call and then restored —
-    * leaving it set would silently change how every other nanos-timestamp
-    * parquet in the session is read. Restoring after `spark.read.parquet`
-    * is safe for the later (lazy) execution: the reader's hadoopConf is
-    * captured at relation creation, inside this window. */
-  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-  private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try spark.read.parquet(s"$dir/events.parquet")
-    finally prev match {
-      case Some(v) => spark.conf.set(NanosKey, v)
-      case None    => spark.conf.unset(NanosKey)
-    }
-  }
+    * The legacy conf has no per-read DataFrameReader option, so it is
+    * scoped ([[Conf.scoped]]) to this call — leaving it set would silently
+    * change how every other nanos-timestamp parquet in the session is
+    * read. Restoring after `spark.read.parquet` is safe for the later
+    * (lazy) execution: the reader's hadoopConf is captured at relation
+    * creation, inside the scope. */
+  private def eventsRaw(spark: SparkSession, dir: String): DataFrame =
+    Conf.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      spark.read.parquet(s"$dir/events.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1,8 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+
+import graft.core.{Conf, DirIO}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The Structured Streaming surface as an ORACLE-BACKED gate query.
@@ -28,6 +32,18 @@ import org.apache.spark.sql.types._
 object StreamingGate {
 
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+  /** Gate conf: events.parquet's ts may be TIMESTAMP(NANOS), read as a
+    * raw long (see [[EventsEra]]). */
+  private val Nanos = NanosKey -> "true"
+  /** Gate conf: the RocksDB state store (q148/q176/q268). */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Stage `dir`'s events.parquet under each of `names` (default: its
+    * own name). */
+  private def events(dir: String, names: String*): Seq[(String, String)] =
+    (if (names.isEmpty) Seq("events.parquet") else names)
+      .map(_ -> s"$dir/events.parquet")
 
   /** events.parquet has shipped with ts as either TIMESTAMP(NANOS) (read
     * as a raw long under nanosAsLong) or TIMESTAMP(MICROS) (read natively
@@ -40,14 +56,8 @@ object StreamingGate {
       eventTime: Column, tsMicros: Column)
 
   private def eventsEra(spark: SparkSession, dir: String): EventsEra = {
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    val tsType =
-      try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-      finally prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
+    val tsType = Conf.scoped(spark, Nanos)(
+      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -64,105 +74,149 @@ object StreamingGate {
     }
   }
 
-  /** Per-run staging for a streaming gate: fresh checkpoint + landing
-    * dirs (the file source watches a DIRECTORY — stage the table file
-    * behind symlinks, exactly how a notification-fed landing prefix
-    * looks in production) and a memory-sink name FIXED per gate. The
-    * previous run's sink table is dropped on entry and the temp dirs are
-    * deleted in `cleanup()`, so repeated Verify/Bench invocations in one
-    * process hold at most one result per gate in driver memory and leave
-    * no checkpoint litter (the nanoTime-suffixed names used before round
-    * 6 accumulated both for the life of the JVM). */
-  private final class GateRun(spark: SparkSession, gate: String,
-      links: Seq[(String, String)]) {
+  /** One streaming gate's staging: fresh checkpoint + landing dirs (the
+    * file source watches a DIRECTORY — stage the table file behind
+    * symlinks, exactly how a notification-fed landing prefix looks in
+    * production) and a memory-sink name FIXED per gate, so repeated
+    * Verify/Bench invocations in one process hold at most one result per
+    * gate in driver memory. Built only by [[GateRun.run]]. */
+  private final class GateRun private (gate: String, ckptPath: Path,
+      srcPath: Path) {
     val sink: String = gate + "_sink"
-    spark.catalog.dropTempView(sink) // previous run's result, if any
-    // tmpfs-preferred scratch (round 15): every micro-batch writes an
-    // offset WAL entry, a commit-log entry, and one state-store delta
-    // file per shuffle partition under ckpt — on a disk-backed /tmp
-    // that per-batch rename-commit latency is host disk weather, not
-    // engine cost (the q60 staging precedent; see DirIO.scratchDir).
-    val ckpt: String = graft.core.DirIO.scratchDir(gate + "_ckpt").toString
-    private val srcPath = graft.core.DirIO.scratchDir(gate + "_src")
+    val ckpt: String = ckptPath.toString
     val srcDir: String = srcPath.toString
-    // State partitions sized to the STAGED SOURCE BYTES, not the core
-    // count (round 16, VERDICT r15 #8; guide §2.1-2.2). Measured first:
-    // StreamProbe attributed q140's 9.4 s wall almost entirely to
-    // per-store state commits — each HDFSBackedStateStore commit costs
-    // ~0.5 s of task time at ANY state size, and a stream-stream join
-    // opens 4 stores per partition, so 32 partitions paid ~128 fixed
-    // commits per batch for KB-scale state (9.4 s → 3.7 s at 2-8
-    // partitions, emitted rows identical). Policy: one state partition
-    // per 32 MB of staged source (floor 1), clamped to the session
-    // parallelism — scale-adaptive by construction: gate corpora
-    // (KB-MB) collapse to a few partitions, a production TB-scale
-    // source keeps every core busy. Stateful-query semantics are
-    // partition-count-invariant (the driver's own 8-vs-32-core runs
-    // already pin that), and the count is persisted per fresh
-    // checkpoint so restart gates stay self-consistent. Env override:
-    // GRAFT_STREAM_STATE_PARTS.
-    private val stagedBytes: Long = links.map { case (_, target) =>
-      val t = java.nio.file.Paths.get(target)
-      if (java.nio.file.Files.isDirectory(t))
-        graft.core.DirIO.walk(t)(_.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum())
-      else if (java.nio.file.Files.exists(t)) java.nio.file.Files.size(t)
-      else 0L
-    }.sum
-    private val stateParts: Int = sys.env.get("GRAFT_STREAM_STATE_PARTS")
-      .map(_.toInt)
-      .getOrElse(math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        stagedBytes / (32L << 20) + 1L)).toInt)
-    private val prevShufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
     /** Stage a fixture under the source dir. Single-file targets (the
       * driver testdata layout) link 1:1; DIRECTORY targets (Spark-written
       * fixtures — the ScaleFixtures sf1 rehearsal corpus) are flattened
       * by linking each part file under the staged stem, because the file
       * stream source does not recurse through a symlinked directory. */
     def stage(name: String, target: String): Unit = {
-      val t = java.nio.file.Paths.get(target)
-      if (java.nio.file.Files.isDirectory(t)) {
+      val t = Paths.get(target)
+      if (Files.isDirectory(t)) {
         val stem = name.stripSuffix(".parquet")
-        graft.core.DirIO.list(t) { st =>
+        DirIO.list(t) { st =>
           val parts = st.filter(
             p => p.toString.endsWith(".parquet")).sorted().iterator()
           var i = 0
           while (parts.hasNext) {
-            java.nio.file.Files.createSymbolicLink(
+            Files.createSymbolicLink(
               srcPath.resolve(f"${stem}_p$i%04d.parquet"), parts.next())
             i += 1
           }
         }
-      } else java.nio.file.Files.createSymbolicLink(
-        srcPath.resolve(name), t)
+      } else Files.createSymbolicLink(srcPath.resolve(name), t)
     }
-    links.foreach { case (name, target) => stage(name, target) }
-    /** Delete the temp dirs (symlinks only — never their targets) and
-      * restore the session's shuffle-partition setting. The sink table
-      * stays readable until the NEXT run of the same gate. */
-    def cleanup(): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
-      Seq(java.nio.file.Paths.get(ckpt), srcPath)
-        .foreach { root =>
-          if (java.nio.file.Files.exists(root))
-            graft.core.DirIO.deleteRecursively(root)
+    /** Land `df` in the source dir as ONE `format` file `name` whose
+      * mod-time is `order` minutes past a fixed epoch: the file source
+      * takes files in mod-time order, so `order` pins which micro-batch
+      * reads the file. */
+    def stageFile(df: DataFrame, name: String, order: Int,
+        format: String = "parquet"): Unit = {
+      val tmp = srcPath.resolve("stage_" + name)
+      df.coalesce(1).write.mode("overwrite").format(format).save(tmp.toString)
+      val dest = srcPath.resolve(name)
+      Files.move(DirIO.list(tmp)(_.filter(
+        _.getFileName.toString.startsWith("part-")).findFirst().get()), dest)
+      DirIO.deleteRecursively(tmp)
+      Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime
+        .fromMillis(1600000000000L + order * 60000L))
+    }
+    /** Drain `writer` to completion from `checkpoint` (default: this
+      * run's). */
+    def drain(writer: DataStreamWriter[_], checkpoint: String = ckpt): Unit =
+      GateRun.drainAll(writer -> checkpoint)
+    /** Drain `df` into this gate's memory sink; returns the sink name. */
+    def drainToSink(df: Dataset[_], outputMode: String = "append"): String = {
+      drain(df.writeStream.format("memory").queryName(sink)
+        .outputMode(outputMode))
+      sink
+    }
+  }
+
+  private object GateRun {
+    /** Run `body` against a fresh [[GateRun]] for `gate` with `links`
+      * staged, under a [[Conf.scoped]] conf of the state partition count
+      * plus the gate's own `conf`. The scratch dirs are
+      * deleted (symlinks only — never their targets) on every exit path.
+      * The previous run's memory sink is dropped on entry; this run's
+      * stays readable until the NEXT run of the same gate.
+      *
+      * State partitions are sized to the STAGED SOURCE BYTES, not the
+      * core count: each state-store commit costs ~0.5 s of task time at
+      * ANY state size and a stream-stream join opens 4 stores per
+      * partition, so 32 partitions paid ~128 fixed commits per batch for
+      * KB-scale state (q140: 9.4 s → 3.7 s at 2-8 partitions, emitted
+      * rows identical). Policy: one state partition per 32 MB of staged
+      * source (floor 1), clamped to the session parallelism — gate
+      * corpora collapse to a few partitions, a TB-scale source keeps
+      * every core busy. Stateful-query semantics are
+      * partition-count-invariant, and the count is persisted per fresh
+      * checkpoint so restart gates stay self-consistent. */
+    def run[A](spark: SparkSession, gate: String,
+        links: Seq[(String, String)], conf: (String, String)*)(
+        body: GateRun => A): A = {
+      spark.catalog.dropTempView(gate + "_sink")
+      val stagedBytes = links.map { case (_, target) =>
+        val t = Paths.get(target)
+        if (Files.isDirectory(t))
+          DirIO.walk(t)(_.filter(Files.isRegularFile(_))
+            .mapToLong(Files.size(_)).sum())
+        else if (Files.exists(t)) Files.size(t)
+        else 0L
+      }.sum
+      val stateParts = math.max(1L, math.min(
+        spark.sparkContext.defaultParallelism.toLong,
+        stagedBytes / (32L << 20) + 1L))
+      // tmpfs-preferred scratch: every micro-batch writes an offset WAL
+      // entry, a commit-log entry and one state-store delta file per
+      // shuffle partition under ckpt (see DirIO.scratchDir)
+      val scratch = scala.collection.mutable.ArrayBuffer.empty[Path]
+      try {
+        scratch += DirIO.scratchDir(gate + "_ckpt")
+        scratch += DirIO.scratchDir(gate + "_src")
+        val run = new GateRun(gate, scratch(0), scratch(1))
+        links.foreach { case (name, target) => run.stage(name, target) }
+        Conf.scoped(spark,
+          ("spark.sql.shuffle.partitions" -> stateParts.toString) +: conf: _*)(
+          body(run))
+      } finally scratch.foreach { root =>
+        if (Files.exists(root)) DirIO.deleteRecursively(root)
+      }
+    }
+
+    /** Start every writer from its checkpoint under Trigger.AvailableNow
+      * (so independent writers run concurrently), await them all, and
+      * stop every started query on any exit. */
+    def drainAll(writers: (DataStreamWriter[_], String)*): Unit = {
+      val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+      try {
+        writers.foreach { case (w, checkpoint) =>
+          started += w.option("checkpointLocation", checkpoint)
+            .trigger(Trigger.AvailableNow()).start()
         }
+        started.foreach(_.awaitTermination())
+      } finally started.foreach(q => if (q.isActive) q.stop())
     }
+  }
+
+  /** Drop `table` and every warehouse directory named after it: the
+    * in-memory catalog forgets a previous JVM's managed tables, the
+    * warehouse does not, and saveAsTable then refuses the location. */
+  private def dropManagedTable(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:"))
+    if (Files.exists(wh))
+      DirIO.list(wh)(_.filter(_.getFileName.toString.startsWith(table))
+        .forEach(root => DirIO.deleteRecursively(root)))
   }
 
   /** Run the streamed hourly profile to completion and return the
     * emitted (watermark-trimmed) result, fully ordered. */
   def streamedHourlyProfile(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q139",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q139", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(era.eventTime.as("event_time"),
@@ -170,23 +224,9 @@ object StreamingGate {
         .withWatermark("event_time", "1 hour")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          sum(col("value").cast(DecimalType(28, 2))).as("sdec")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
@@ -205,21 +245,17 @@ object StreamingGate {
     * 2 h state-retention delay) passes the window end. The
     * measured-then-encoded law lives in the q206 QueryDef's oracle. */
   def streamedJoinAgg(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q206",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "4 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+    val sink = GateRun.run(spark, "q206", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = spark.readStream
+        .schema(era.schema)
+        .parquet(run.srcDir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "4 hours")
+      run.drainToSink(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
@@ -227,23 +263,9 @@ object StreamingGate {
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
             .as("gap_us"))
         .groupBy(window(col("p_time"), "1 hour"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("gap_us_sum"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("gap_us_sum")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
@@ -262,46 +284,28 @@ object StreamingGate {
     * join EXACTLY — chained join states lose nothing and invent
     * nothing under AvailableNow drain. */
   def streamedTripleJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q250",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "8 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val sink = GateRun.run(spark, "q250", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = spark.readStream
+        .schema(era.schema)
+        .parquet(run.srcDir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "8 hours")
       val vc = side("view", "v").join(side("click", "c"),
         col("v_user") === col("c_user") &&
           col("c_time") >= col("v_time") &&
           col("c_time") <= col("v_time") + expr("INTERVAL 240 MINUTES"))
-      val q = vc.join(side("purchase", "p"),
+      run.drainToSink(vc.join(side("purchase", "p"),
           col("c_user") === col("p_user") &&
             col("p_time") >= col("c_time") &&
             col("p_time") <= col("c_time") + expr("INTERVAL 240 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
-          col("c_id").as("click_id"), col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          col("c_id").as("click_id"), col("p_id").as("purchase_id")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("view_id"), col("click_id"),
         col("purchase_id"))
   }
@@ -316,45 +320,27 @@ object StreamingGate {
     * 19th streaming law (q256's oracle): the drained dedup→join chain
     * equals the batch interval join of the DISTINCT corpus. */
   def streamedDedupJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q256",
-      Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "8 hours")
-      .dropDuplicatesWithinWatermark(s"${pfx}_id")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+    val sink = GateRun.run(spark, "q256",
+        events(dir, "events_a.parquet", "events_b.parquet"), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = spark.readStream
+        .schema(era.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(run.srcDir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "8 hours")
+        .dropDuplicatesWithinWatermark(s"${pfx}_id")
+      run.drainToSink(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
-          col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          col("p_id").as("purchase_id")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
   }
 
@@ -474,12 +460,8 @@ object StreamingGate {
     * the law, mirrored in integer SQL). */
   def streamedCustomSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q259",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val sink = GateRun.run(spark, "q259", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
       val src = spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
@@ -487,23 +469,9 @@ object StreamingGate {
           unix_micros(era.eventTime).as("tus"),
           round(col("value") * 100).cast(LongType).as("cents"))
         .as[SegEvent]
-      val q = customSegments(src)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+      run.drainToSink(customSegments(src), "update")
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("seg_start_us"))
   }
 
@@ -533,12 +501,8 @@ object StreamingGate {
     * (est = (k−1)·2⁴⁸/(h_k+1) vs exact distinct, signed ppm error). */
   def streamedBottomK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q318",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val (sink, era) = GateRun.run(spark, "q318", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
       val src = spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
@@ -548,25 +512,12 @@ object StreamingGate {
             " 16, 10) AS BIGINT)")
             .as("h"))
         .as[BkEvent]
-      val q = src.groupByKey(_.shard)
+      val sink = run.drainToSink(src.groupByKey(_.shard)
         .flatMapGroupsWithState[BkState, BkOut](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(bkFn)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          OutputMode.Update(), GroupStateTimeout.NoTimeout())(bkFn), "update")
+      (sink, era)
     }
-    val kth = spark.table(run.sink)
+    val kth = spark.table(sink)
       .select(col("shard"), col("h")).distinct()
       .selectExpr("shard", "h",
         "row_number() OVER (PARTITION BY shard ORDER BY h) AS rn")
@@ -635,12 +586,8 @@ object StreamingGate {
     * for heavy-hitter candidates (est ≥ N/50) against exact counts. */
   def streamedCountMin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q323",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val (sink, era) = GateRun.run(spark, "q323", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
       val src = spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
@@ -654,28 +601,15 @@ object StreamingGate {
           expr(cmBucketSql(3, "ak")).cast("long").as("c3"),
           expr(cmBucketSql(4, "ak")).cast("long").as("c4"))
         .as[CmEvent]
-      val q = src.groupByKey(_.shard)
+      val sink = run.drainToSink(src.groupByKey(_.shard)
         .flatMapGroupsWithState[CmState, CmOut](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(cmFn)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          OutputMode.Update(), GroupStateTimeout.NoTimeout())(cmFn), "update")
+      (sink, era)
     }
     // Drain reconciliation: counters are monotone → final value per
     // (shard, cell) is the max emission; the global sketch is the SUM
     // of per-shard matrices (mergeability, exercised relationally).
-    val merged = spark.table(run.sink)
+    val merged = spark.table(sink)
       .groupBy(col("shard"), col("cell")).agg(max(col("cnt")).as("cnt"))
       .groupBy(col("cell")).agg(sum(col("cnt")).as("c"))
     val exact = spark.read.schema(era.schema)
@@ -713,12 +647,8 @@ object StreamingGate {
     * fingerprint). Lines are constructed with explicit concat (never
     * to_json) so BOTH arms' bytes are engine-reproducible. */
   def streamedDeadLetter(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q329",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val sink = GateRun.run(spark, "q329", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
       val src = spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
@@ -748,22 +678,9 @@ object StreamingGate {
           coalesce(col("j.cents"), lit(0L)).as("cents"),
           coalesce(col("j.event_id"), lit(0L)).as("eid"),
           length(col("line")).cast("long").as("raw_len"))
-      val q = parsed.writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+      run.drainToSink(parsed)
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .groupBy(col("etype"))
       .agg(count(lit(1)).as("n"),
         sum(col("cents")).as("sum_cents"),
@@ -822,17 +739,9 @@ object StreamingGate {
     * oracle, different engine path (RocksDB typed state + real timers). */
   def streamedTwsSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q268",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevNanos = spark.conf.getOption(NanosKey)
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(NanosKey, "true")
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q268", events(dir), Nanos, RocksDb) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(col("user_id"), era.eventTime.as("event_time"),
@@ -843,27 +752,9 @@ object StreamingGate {
         .groupByKey(_.user_id)
         .transformWithState(new SegTwsProcessor,
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevNanos match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
+          OutputMode.Append()))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("seg_start_us"))
   }
 
@@ -877,14 +768,10 @@ object StreamingGate {
     * delivery contributes NOTHING, and the agg emits the deduped hourly
     * counts for windows the final watermark passed. */
   def streamedDedupAgg(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q211",
-      Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q211",
+        events(dir, "events_a.parquet", "events_b.parquet"), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(run.srcDir)
@@ -893,23 +780,9 @@ object StreamingGate {
         .withWatermark("event_time", "4 hours")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .agg(count(lit(1)).as("n")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
@@ -926,13 +799,9 @@ object StreamingGate {
     * window only when every contained hour could have arrived. The
     * measured-then-encoded emission boundary lives in q235's oracle. */
   def streamedAggCascade(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q235",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q235", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(era.eventTime.as("event_time"),
@@ -943,23 +812,9 @@ object StreamingGate {
           sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
         .groupBy(window(col("window"), "4 hours"), col("event_type"))
         .agg(sum(col("n")).as("n_events"), count(lit(1)).as("n_hours"),
-          sum(col("sdec")).as("sdec"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          sum(col("sdec")).as("sdec")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("win4_start"),
@@ -978,40 +833,22 @@ object StreamingGate {
     * include BOTH branches' rows. The slowest source gates emission
     * for everyone; the oracle replays that in SQL. */
   def streamedUnionWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q219",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def src(): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .select(era.eventTime.as("event_time"), col("event_type"))
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val sink = GateRun.run(spark, "q219", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      def src(): DataFrame = spark.readStream
+        .schema(era.schema)
+        .parquet(run.srcDir)
+        .select(era.eventTime.as("event_time"), col("event_type"))
       val a = src().withWatermark("event_time", "4 hours")
       val b = src()
         .select((col("event_time") - expr("INTERVAL 6 HOURS"))
           .as("event_time"), col("event_type"))
         .withWatermark("event_time", "4 hours")
-      val q = a.unionAll(b)
+      run.drainToSink(a.unionAll(b)
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .agg(count(lit(1)).as("n")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
@@ -1030,29 +867,23 @@ object StreamingGate {
     * corpus: a dimension update becomes visible at the next restart
     * without reprocessing or corrupting earlier output. */
   def streamedDimRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q231",
-      Seq("events_a.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val dimDir = java.nio.file.Files.createTempDirectory("q231_dim")
-    val outDir = java.nio.file.Files.createTempDirectory("q231_sink")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val dimDir = Files.createTempDirectory("q231_dim")
+    val outDir = Files.createTempDirectory("q231_sink")
+    try GateRun.run(spark, "q231", events(dir, "events_a.parquet"),
+        Nanos) { run =>
+      val era = eventsEra(spark, dir)
       val types = spark.read.schema(era.schema)
         .parquet(run.srcDir).select(col("event_type")).distinct()
       def writeDim(ver: String): Unit = types
         .select(col("event_type"),
           concat(lit(ver + "_"), col("event_type")).as("label"))
         .coalesce(1).write.mode("overwrite").parquet(dimDir.toString)
-      def runOnce(): Unit = {
-        val q = spark.readStream.schema(era.schema).parquet(run.srcDir)
+      def runOnce(): Unit = run.drain(
+        spark.readStream.schema(era.schema).parquet(run.srcDir)
           .select(col("event_type"), col("value"))
           .join(spark.read.parquet(dimDir.toString), Seq("event_type"))
           .writeStream.format("parquet").option("path", outDir.toString)
-          .outputMode("append").option("checkpointLocation", run.ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
+          .outputMode("append"))
       writeDim("v1"); runOnce()
       writeDim("v2")
       run.stage("events_b.parquet", s"$dir/events.parquet")
@@ -1063,17 +894,8 @@ object StreamingGate {
           sum(round(col("value") * 100).cast("long")).as("cents_total"))
         .orderBy(col("label"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      Seq(dimDir, outDir).foreach { root =>
-        if (java.nio.file.Files.exists(root))
-          graft.core.DirIO.deleteRecursively(root)
-      }
-    }
+    } finally Seq(dimDir, outDir).filter(Files.exists(_))
+      .foreach(DirIO.deleteRecursively)
   }
 
   /** q337: the pipeline-upgrade contract (32nd law). TWO sequential
@@ -1091,13 +913,10 @@ object StreamingGate {
     * recovery-compatible changes Structured Streaming documents; this
     * gate turns that promise into a hash-checked law. */
   def streamedSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q337",
-      Seq("events_a.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val outDir = java.nio.file.Files.createTempDirectory("q337_sink")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val outDir = Files.createTempDirectory("q337_sink")
+    try GateRun.run(spark, "q337", events(dir, "events_a.parquet"),
+        Nanos) { run =>
+      val era = eventsEra(spark, dir)
       def runOnce(upgraded: Boolean): Unit = {
         val base = spark.readStream.schema(era.schema).parquet(run.srcDir)
           .select(col("event_id"), col("event_type"),
@@ -1105,11 +924,8 @@ object StreamingGate {
         val shaped =
           if (upgraded) base.withColumn("band", col("cents") % 7)
           else base
-        val q = shaped.writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .outputMode("append").option("checkpointLocation", run.ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
+        run.drain(shaped.writeStream.format("parquet")
+          .option("path", outDir.toString).outputMode("append"))
       }
       runOnce(upgraded = false)
       // the upgrade window: new corpus arrives AND the jar changes
@@ -1126,14 +942,7 @@ object StreamingGate {
           coalesce(sum(col("band")), lit(-1L)).as("sum_band"))
         .orderBy(col("schema_era"), col("event_type"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      graft.core.DirIO.deleteRecursively(outDir)
-    }
+    } finally DirIO.deleteRecursively(outDir)
   }
 
   /** q192: q139's pipeline against the PRODUCTION sink — a parquet
@@ -1149,14 +958,10 @@ object StreamingGate {
     * execute). Result is eagerly localCheckpoint-ed so the temp sink
     * dir can be deleted before returning. */
   def streamedFileSink(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q192",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("q192_sink")
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val outDir = Files.createTempDirectory("q192_sink")
+    try GateRun.run(spark, "q192", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drain(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(era.eventTime.as("event_time"),
@@ -1168,11 +973,7 @@ object StreamingGate {
         .writeStream
         .format("parquet")
         .option("path", outDir.toString)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
+        .outputMode("append"))
       spark.read.parquet(outDir.toString)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -1181,14 +982,7 @@ object StreamingGate {
           col("sdec").cast(DoubleType).as("sum_value"))
         .orderBy(col("hour_start"), col("event_type"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      graft.core.DirIO.deleteRecursively(outDir)
-    }
+    } finally DirIO.deleteRecursively(outDir)
   }
 
   /** Run the streamed view→purchase interval join to completion and
@@ -1196,44 +990,26 @@ object StreamingGate {
     * file-source streams over the same staged landing dir, each
     * watermarked, joined on user + a 2-hour event-time interval. */
   def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q140",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "4 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+    val sink = GateRun.run(spark, "q140", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = spark.readStream
+        .schema(era.schema)
+        .parquet(run.srcDir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "4 hours")
+      run.drainToSink(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("p_id").as("purchase_id"),
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
-            .as("gap_us"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+            .as("gap_us")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
   }
 
@@ -1256,7 +1032,53 @@ object StreamingGate {
     * the union of q187's and its mirror — the full-outer drain equals
     * the BATCH full interval join exactly. The sentinel recipe already
     * advances both side clocks (each side's watermark is post-filter),
-    * so purchase-side eviction needs no new machinery. */
+    * so purchase-side eviction needs no new machinery.
+    *
+    * This helper stages that scaffold inside `run` and returns the
+    * watermarked view/purchase side builder. */
+  private def sentinelSides(spark: SparkSession, dir: String,
+      run: GateRun): (String, String) => DataFrame = {
+    // PRECONDITION (sentinel-flush): the staged corpus must be ONE
+    // parquet file so every real event lands in micro-batch 1 under
+    // maxFilesPerTrigger = 1. A multi-file corpus would deliver later
+    // files AFTER the sentinel batch advanced the watermark, and their
+    // rows would be dropped as late — fail fast instead of silently
+    // shrinking the drain if the fixture ever splits.
+    require(Files.isRegularFile(Paths.get(dir, "events.parquet")),
+      s"$dir/events.parquet must be a single parquet file for the " +
+        "sentinel-flush drain (coalesce the fixture to one file)")
+    val era = eventsEra(spark, dir)
+    // sentinels: one view + one purchase (user −1, matching each other
+    // so the pair is droppable post-sink) 10 days past the corpus max,
+    // appended as a SECOND file in the landing dir (later mtime ⇒
+    // second micro-batch under maxFilesPerTrigger = 1). BOTH sides
+    // need one: each side's watermark is computed after its
+    // event_type filter, so a view-only sentinel would advance only
+    // the view clock and the global (min) watermark would stall.
+    val maxUs = graft.core.Tables.events(spark, dir)
+      .agg(max(unix_micros(col("ts")))).head.getLong(0)
+    val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
+    val tsExpr = era.schema("ts").dataType match {
+      case LongType => lit(sentinelUs * 1000L) // nanos-as-long era
+      case dt       => timestamp_micros(lit(sentinelUs)).cast(dt)
+    }
+    spark.range(1).select(explode(array(lit("view"), lit("purchase")))
+        .as("event_type"))
+      .select(lit(-1L).as("event_id"), tsExpr.as("ts"),
+        lit(-1L).as("user_id"), col("event_type"),
+        lit(0.0).as("value"), lit(null).cast("string").as("props"))
+      .coalesce(1).write.mode("append").parquet(run.srcDir)
+    (tpe, pfx) => spark.readStream
+      .schema(era.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(run.srcDir)
+      .filter(col("event_type") === tpe)
+      .select(col("user_id").as(s"${pfx}_user"),
+        col("event_id").as(s"${pfx}_id"),
+        era.eventTime.as(s"${pfx}_time"))
+      .withWatermark(s"${pfx}_time", "4 hours")
+  }
+
   /** q237: streamed LEFT SEMI interval join — the existence-check join
     * (which views converted at all?) as a watermarked stream-stream
     * join. Semi semantics are the interesting law: a view with THREE
@@ -1267,137 +1089,36 @@ object StreamingGate {
     * sentinel pair matches itself and is dropped post-sink. Drained
     * emission equals the batch EXISTS query exactly. */
   def streamedSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    require(java.nio.file.Files.isRegularFile(
-      java.nio.file.Paths.get(dir, "events.parquet")),
-      s"$dir/events.parquet must be a single parquet file for the " +
-        "sentinel-flush drain (coalesce the fixture to one file)")
-    val run = new GateRun(spark, "q237",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val maxUs = graft.core.Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head.getLong(0)
-      val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
-      val tsExpr = era.schema("ts").dataType match {
-        case LongType => lit(sentinelUs * 1000L) // nanos-as-long era
-        case dt       => timestamp_micros(lit(sentinelUs)).cast(dt)
-      }
-      spark.range(1).select(explode(array(lit("view"), lit("purchase")))
-          .as("event_type"))
-        .select(lit(-1L).as("event_id"), tsExpr.as("ts"),
-          lit(-1L).as("user_id"), col("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("append").parquet(run.srcDir)
-      def side(tpe: String, pfx: String): DataFrame = spark.readStream
-        .schema(era.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run.srcDir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      val q = side("view", "v").join(side("purchase", "p"),
+    val sink = GateRun.run(spark, "q237", events(dir), Nanos) { run =>
+      val side = sentinelSides(spark, dir, run)
+      run.drainToSink(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
           "left_semi")
-        .select(col("v_user").as("user_id"), col("v_id").as("view_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .select(col("v_user").as("user_id"), col("v_id").as("view_id")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .filter(col("user_id") =!= -1L)
       .orderBy(col("user_id"), col("view_id"))
   }
 
   def streamedOuterJoin(spark: SparkSession, dir: String,
       joinType: String = "left_outer", gate: String = "q187"): DataFrame = {
-    // PRECONDITION (sentinel-flush): the staged corpus must be ONE
-    // parquet file so every real event lands in micro-batch 1 under
-    // maxFilesPerTrigger = 1. A multi-file corpus would deliver later
-    // files AFTER the sentinel batch advanced the watermark, and their
-    // rows would be dropped as late — fail fast instead of silently
-    // shrinking the drain if the fixture ever splits.
-    require(java.nio.file.Files.isRegularFile(
-      java.nio.file.Paths.get(dir, "events.parquet")),
-      s"$dir/events.parquet must be a single parquet file for the " +
-        "sentinel-flush drain (coalesce the fixture to one file)")
-    val run = new GateRun(spark, gate,
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      // sentinels: one view + one purchase (user −1, matching each other
-      // so the pair is droppable post-sink) 10 days past the corpus max,
-      // appended as a SECOND file in the landing dir (later mtime ⇒
-      // second micro-batch under maxFilesPerTrigger = 1). BOTH sides
-      // need one: each side's watermark is computed after its
-      // event_type filter, so a view-only sentinel would advance only
-      // the view clock and the global (min) watermark would stall.
-      val maxUs = graft.core.Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head.getLong(0)
-      val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
-      val tsExpr = era.schema("ts").dataType match {
-        case LongType => lit(sentinelUs * 1000L) // nanos-as-long era
-        case dt       => timestamp_micros(lit(sentinelUs)).cast(dt)
-      }
-      spark.range(1).select(explode(array(lit("view"), lit("purchase")))
-          .as("event_type"))
-        .select(lit(-1L).as("event_id"), tsExpr.as("ts"),
-          lit(-1L).as("user_id"), col("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("append").parquet(run.srcDir)
-      def side(tpe: String, pfx: String): DataFrame = spark.readStream
-        .schema(era.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run.srcDir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      val q = side("view", "v").join(side("purchase", "p"),
+    val sink = GateRun.run(spark, gate, events(dir), Nanos) { run =>
+      val side = sentinelSides(spark, dir, run)
+      run.drainToSink(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
           joinType)
         // v_user is null on purchase-side evictions (full_outer only)
         .select(coalesce(col("v_user"), col("p_user")).as("user_id"),
-          col("v_id").as("view_id"), col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          col("v_id").as("view_id"), col("p_id").as("purchase_id")))
     }
     // sentinels are the user −1 pair (they match each other, so they
     // never surface as null-matched rows on either side)
-    spark.table(run.sink)
+    spark.table(sink)
       .filter(col("user_id") =!= -1L)
       .orderBy(col("user_id"), col("view_id").asc_nulls_first,
         col("purchase_id").asc_nulls_first)
@@ -1442,17 +1163,9 @@ object StreamingGate {
   /** Run the streamed running-totals processor to completion. */
   def streamedRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q148",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevNanos = spark.conf.getOption(NanosKey)
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(NanosKey, "true")
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q148", events(dir), Nanos, RocksDb) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(col("user_id"), col("event_id"),
@@ -1462,27 +1175,9 @@ object StreamingGate {
         .groupByKey(_.user_id)
         .transformWithState(new RunningTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevNanos match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
+          org.apache.spark.sql.streaming.OutputMode.Update()), "update")
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .orderBy(col("user_id"), col("running_n"))
   }
 
@@ -1492,33 +1187,15 @@ object StreamingGate {
     * `dropDuplicates(event_id)`; the emitted set must equal the
     * single-copy table. Returns the post-dedup per-type aggregate. */
   def streamedReplayDedup(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q149", Seq(
-      "events.parquet" -> s"$dir/events.parquet",
-      "events_replay.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q149",
+        events(dir, "events.parquet", "events_replay.parquet"), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
-        .dropDuplicates("event_id")
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .dropDuplicates("event_id"))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
@@ -1589,32 +1266,18 @@ object StreamingGate {
     import spark.implicits._
     import graft.functions.TextFunctions.{minhashSignature, shingles, tokens}
     val (numHashes, bands) = (64, 32)
-    val run = new GateRun(spark, "q176", Seq.empty)
-    // stage the 3-way batch split (plain columnar files, like a
-    // notification-fed landing prefix receiving the corpus in chunks)
     val staged = docs.select(col("doc_id").cast(LongType).as("doc_id"),
       col("text").cast(StringType).as("text"))
-    (0 until 3).foreach { k =>
-      val tmp = java.nio.file.Paths.get(run.srcDir, s"_stage$k")
-      staged.filter(pmod(col("doc_id"), lit(3)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = graft.core.DirIO.list(tmp)(
-        _.filter(p => p.toString.endsWith(".parquet")).findFirst().get())
-      val dst = java.nio.file.Paths.get(run.srcDir, s"batch$k.parquet")
-      java.nio.file.Files.move(part, dst)
-      // ascending mtimes pin the batch order (the RESULT is order-
-      // independent; this keeps the drain sequence deterministic)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
-      graft.core.DirIO.deleteRecursively(tmp)
-    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val sink = GateRun.run(spark, "q176", Seq.empty, RocksDb) { run =>
+      // stage the 3-way batch split (plain columnar files, like a
+      // notification-fed landing prefix receiving the corpus in chunks);
+      // the RESULT is batch-order-independent, the pinned mtimes only
+      // keep the drain sequence deterministic
+      (0 until 3).foreach(k => run.stageFile(
+        staged.filter(pmod(col("doc_id"), lit(3)) === k),
+        s"batch$k.parquet", k))
       val buckets = spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1627,28 +1290,14 @@ object StreamingGate {
             col("sig"), numHashes, bands)).as("bk"))
         .select(col("bk.band").as("band"), col("bk.h").as("h"), col("doc_id"))
         .as[BucketDoc]
-      val q = buckets
+      run.drainToSink(buckets
         .groupByKey(r => (r.band, r.h))
         .transformWithState(new NearDupCandidateProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
+          org.apache.spark.sql.streaming.OutputMode.Append()))
     }
     graft.operators.MinHashLSH.verifyCandidates(
-      spark.table(run.sink).dropDuplicates("doc_a", "doc_b"),
+      spark.table(sink).dropDuplicates("doc_a", "doc_b"),
       graft.operators.MinHashLSH.shingled(staged, "doc_id", "text", 3),
       threshold)
   }
@@ -1658,36 +1307,18 @@ object StreamingGate {
     * c_custkey (stateless — the static side is re-planned per batch),
     * aggregated after drain. */
   def streamedStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q168",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment")))
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q168", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment")))
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast(LongType).as("cents"))
-        .join(dim, col("user_id") === col("c_custkey"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .join(dim, col("user_id") === col("c_custkey")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .groupBy(col("c_mktsegment").as("mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_total"))
       .orderBy(col("mktsegment"), col("event_type"))
@@ -1703,27 +1334,18 @@ object StreamingGate {
   def streamedModelScoring(spark: SparkSession, dir: String,
       w: Array[Long], stopTerms: Seq[String],
       threshPerMille: Long): DataFrame = {
-    val run = new GateRun(spark, "q272",
-      Seq("documents.parquet" -> s"$dir/documents.parquet"))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (zc, yc) = graft.operators.HashedLogReg.inRowScore(
-      "toks", w, stopTerms, threshPerMille)
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q272",
+        Seq("documents.parquet" -> s"$dir/documents.parquet")) { run =>
+      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val (zc, yc) = graft.operators.HashedLogReg.inRowScore(
+        "toks", w, stopTerms, threshPerMille)
+      run.drainToSink(spark.readStream
         .schema(schema)
         .parquet(run.srcDir)
         .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
-        .select(col("doc_id"), yc.as("y"), zc.as("z"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally run.cleanup()
-    spark.table(run.sink)
+        .select(col("doc_id"), yc.as("y"), zc.as("z")))
+    }
+    spark.table(sink)
       .groupBy(col("y"),
         when(col("z") >= 0L, 1L).otherwise(0L).as("pred"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1734,17 +1356,6 @@ object StreamingGate {
       .orderBy(col("y"), col("pred"))
   }
 
-  /** Run the UPDATE-mode emission-history gate to completion: the event
-    * corpus is split into 8 deterministic files (event_id % 8) with
-    * strictly increasing modification times, streamed ONE FILE PER
-    * MICRO-BATCH (`maxFilesPerTrigger` 1 — the file source orders by
-    * mod-time, which the split pins), through an unwindowed per-type
-    * count/sum aggregation in update mode. Update mode emits a key's
-    * CURRENT aggregate in every batch that touches it, so the drained
-    * sink holds each type's full PREFIX HISTORY — a pure function of
-    * the data once the batch order is pinned, which is exactly what the
-    * oracle replays (cumulative counts over event_id % 8 ≤ k, rows only
-    * where file k touches the type). */
   /** q355: the REAL ingest pipeline ([[graft.streaming.MicroBatchPipeline]])
     * drained over a staged 12-file JSON corpus with planted corruption,
     * quarantine + idempotent commit + maxFilesPerTrigger = 3, rolled up
@@ -1752,23 +1363,12 @@ object StreamingGate {
     * discipline), the injected clock pins the enrichment columns, and
     * every output cell is a pure function of events arithmetic. */
   def ingestQuarantineLaw(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q355", Seq())
     val mainT = "q355_main_table"
     val dlqT = "q355_dlq_table"
-    Seq(mainT, dlqT).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+    GateRun.run(spark, "q355", Seq(), Nanos) { run =>
       // a crashed prior run can leave the managed location behind with
       // no catalog entry; saveAsTable then fails LOCATION_ALREADY_EXISTS
-      val loc = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(loc))
-        graft.core.DirIO.deleteRecursively(loc)
-    }
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+      Seq(mainT, dlqT).foreach(dropManagedTable(spark, _))
       val lines = spark.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id").isNotNull)
         .select(col("event_id").cast(LongType).as("eid"))
@@ -1787,23 +1387,11 @@ object StreamingGate {
         // PERMISSIVE partial-results salvage cannot rescue a field
         .withColumn("line", expr(
           "CASE WHEN eid % 13 = 0 THEN substring(full, 2) ELSE full END"))
-      (0 until 12).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
+      // pin the batch order: batches are exactly {f00..f02},
+      // {f03..f05}, {f06..f08}, {f09..f11}
+      (0 until 12).foreach(f => run.stageFile(
         lines.filter(col("eid") % 12 === f).orderBy(col("eid"))
-          .select(col("line")).coalesce(1)
-          .write.mode("overwrite").text(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".txt")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%02d.json")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time, so
-        // batches are exactly {f00..f02}, {f03..f05}, {f06..f08},
-        // {f09..f11}
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+          .select(col("line")), f"f$f%02d.json", f, "text"))
       graft.streaming.MicroBatchPipeline.runAvailable(spark,
         graft.streaming.MicroBatchPipeline.Config(
         inputDir = run.srcDir,
@@ -1828,66 +1416,41 @@ object StreamingGate {
           (col("n_main") + col("n_dlq")).as("rows_per_trigger"),
           col("sum_speed"), col("dlq_bytes"))
         .orderBy(col("batch_id"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
     }
   }
 
+  /** Run the UPDATE-mode emission-history gate to completion: the event
+    * corpus is split into 8 deterministic files (event_id % 8) with
+    * strictly increasing modification times, streamed ONE FILE PER
+    * MICRO-BATCH (`maxFilesPerTrigger` 1 — the file source orders by
+    * mod-time, which the split pins), through an unwindowed per-type
+    * count/sum aggregation in update mode. Update mode emits a key's
+    * CURRENT aggregate in every batch that touches it, so the drained
+    * sink holds each type's full PREFIX HISTORY — a pure function of
+    * the data once the batch order is pinned, which is exactly what the
+    * oracle replays (cumulative counts over event_id % 8 ≤ k, rows only
+    * where file k touches the type). */
   def streamedUpdateHistory(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q275", Seq())
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    val sink = GateRun.run(spark, "q275", Seq(), Nanos) { run =>
       val ev = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      (0 until 8).foreach(f => run.stageFile(
+        ev.filter(col("event_id") % 8 === f), f"f$f%d.parquet", f))
       val schema = StructType(Seq(
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
+      run.drainToSink(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(run.srcDir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("cents").cast(DecimalType(38, 0))).cast(LongType)
-            .as("cents_total"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+            .as("cents_total")), "update")
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(col("event_type"), col("n"), col("cents_total"))
       .orderBy(col("event_type"), col("n"))
   }
@@ -1904,27 +1467,13 @@ object StreamingGate {
     * chronological — the q96 parity format), so version comparison is
     * engine-identical. */
   def streamedCdcLatest(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.Upsert
-    val run = new GateRun(spark, "q280", Seq())
     val table = "q280_cdc_state"
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
+    GateRun.run(spark, "q280", Seq(), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      // the prefix also clears TableSwap's rewrite staging directory
       spark.sql(s"DROP TABLE IF EXISTS ${table}__swap_tmp")
-      // a previous JVM's managed-table DIRECTORIES (the state table and
-      // TableSwap's rewrite staging) survive its in-memory catalog —
-      // clear the locations too or saveAsTable refuses
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
+      dropManagedTable(spark, table)
       val ev = spark.read.schema(era.schema)
         .parquet(s"$dir/events.parquet")
         .filter(col("user_id") < 200)
@@ -1932,26 +1481,15 @@ object StreamingGate {
           round(col("value") * 100).cast(LongType).as("cents"),
           date_format(era.eventTime, "yyyy-MM-dd HH:mm:ss.SSSSSS")
             .as("ts_str"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      (0 until 8).foreach(f => run.stageFile(
+        ev.filter(col("event_id") % 8 === f), f"f$f%d.parquet", f))
       val schema = StructType(Seq(
         StructField("user_id", LongType),
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType),
         StructField("ts_str", StringType)))
-      val q = spark.readStream
+      run.drain(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(run.srcDir)
@@ -1963,17 +1501,7 @@ object StreamingGate {
             latest.write.format("parquet").saveAsTable(table)
           else Upsert.mergeLatest(spark, table, latest,
             Seq("user_id"), Seq("ts_str", "event_id"))
-        }
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        })
     }
     val out = spark.table(table)
       .select(col("user_id"), col("event_type"), col("event_id"),
@@ -1987,13 +1515,9 @@ object StreamingGate {
   /** Run the streamed per-user session build to completion and return
     * the emitted (watermark-closed) sessions, fully ordered. */
   def streamedSessions(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q141",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q141", events(dir), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(era.eventTime.as("event_time"),
@@ -2001,23 +1525,9 @@ object StreamingGate {
         .withWatermark("event_time", "1 hour")
         .groupBy(session_window(col("event_time"), "30 minutes"),
           col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .agg(count(lit(1)).as("n_events")))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
@@ -3156,46 +2666,19 @@ object StreamingGate {
     * (cents desc, type — total order), so the output is the per-batch
     * top-to-bottom standings history a live leaderboard would render. */
   def streamedCompleteHistory(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q285", Seq())
     val table = "q285_complete_history"
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      // clear a previous JVM's surviving managed-table directory (the
-      // q280 lesson: the in-memory catalog forgets, the warehouse dir
-      // does not)
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
+    GateRun.run(spark, "q285", Seq(), Nanos) { run =>
+      dropManagedTable(spark, table)
       val ev = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      (0 until 8).foreach(f => run.stageFile(
+        ev.filter(col("event_id") % 8 === f), f"f$f%d.parquet", f))
       val schema = StructType(Seq(
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
+      run.drain(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(run.srcDir)
@@ -3211,17 +2694,7 @@ object StreamingGate {
           else tagged.write.format("parquet").mode("append")
             .saveAsTable(table)
         }
-        .outputMode("complete")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .outputMode("complete"))
     }
     val wrk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("batch_id"))
@@ -3248,36 +2721,23 @@ object StreamingGate {
     * how the stream chopped it. That is the distributed/streaming
     * sampling contract (reservoir semantics without an ordered scan). */
   def streamedWeightedSample(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val k = 200
-    val run = new GateRun(spark, "q290", Seq())
-    // the k-row sample state lives on the driver between batches — the
-    // BPE-merge-table precedent: state is MODEL-sized (k rows) by the
-    // operator's own contract, which is exactly what makes the stream
-    // bounded-state; at scale the same fold runs as a per-batch
-    // TakeOrdered over |batch|+k rows
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Array[org.apache.spark.sql.Row]](Array.empty)
-    try {
+    GateRun.run(spark, "q290", Seq()) { run =>
+      // the k-row sample state lives on the driver between batches — the
+      // BPE-merge-table precedent: state is MODEL-sized (k rows) by the
+      // operator's own contract, which is exactly what makes the stream
+      // bounded-state; at scale the same fold runs as a per-batch
+      // TakeOrdered over |batch|+k rows
+      val state = new java.util.concurrent.atomic.AtomicReference[
+        Array[org.apache.spark.sql.Row]](Array.empty)
       val o = graft.core.Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("id"),
         round(col("o_totalprice") * 100).cast("long").as("w"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        o.filter(col("id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      (0 until 8).foreach(f => run.stageFile(
+        o.filter(col("id") % 8 === f), f"f$f%d.parquet", f))
       val schema = StructType(Seq(
         StructField("id", LongType), StructField("w", LongType)))
-      val q = spark.readStream
+      run.drain(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(run.srcDir)
@@ -3299,11 +2759,7 @@ object StreamingGate {
           state.set(top.collect())
           ()
         }
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
+        .outputMode("update"))
       val sch = StructType(Seq(
         StructField("id", LongType), StructField("w", LongType),
         StructField("e", org.apache.spark.sql.types.DoubleType)))
@@ -3312,7 +2768,7 @@ object StreamingGate {
         .select(col("id"), col("w"))
         .orderBy(col("id"))
         .localCheckpoint(false)
-    } finally run.cleanup()
+    }
   }
 
   /** Run the streamed drift-monitor gate to completion: events arrive
@@ -3330,13 +2786,9 @@ object StreamingGate {
     * data-quality monitor shape: broadcast reference, per-batch keyed
     * aggregation, bounded emission. */
   def streamedDriftMonitor(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q301", Seq())
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Long, Long, Long)]()
-    try {
+    GateRun.run(spark, "q301", Seq(), Nanos) { run =>
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Long, Long, Long, Long)]()
       val ev = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
@@ -3351,23 +2803,12 @@ object StreamingGate {
         .select(col("cents"), col("rcum"))
         .localCheckpoint(false)
       val nRef = ev.count()
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      (0 until 8).foreach(f => run.stageFile(
+        ev.filter(col("event_id") % 8 === f), f"f$f%d.parquet", f))
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
+      run.drain(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(run.srcDir)
@@ -3391,11 +2832,7 @@ object StreamingGate {
           results.add((id, nB, ks, reject))
           ()
         }
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
+        .outputMode("update"))
       import scala.jdk.CollectionConverters._
       import spark.implicits._
       results.asScala.toSeq.sortBy(_._1)
@@ -3405,48 +2842,24 @@ object StreamingGate {
           when(col("reject_05") === 1L, "drifted").otherwise("consistent"))
         .orderBy(col("batch_id"))
         .localCheckpoint(false)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
     }
   }
 
   /** q184: the q149 replay harness with watermarked, bounded-state
     * dedup. See the QueryDef comment for the delay-covers-span law. */
   def streamedWatermarkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q184", Seq(
-      "events.parquet" -> s"$dir/events.parquet",
-      "events_replay.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
+    val sink = GateRun.run(spark, "q184",
+        events(dir, "events.parquet", "events_replay.parquet"), Nanos) { run =>
+      val era = eventsEra(spark, dir)
+      run.drainToSink(spark.readStream
         .schema(era.schema)
         .parquet(run.srcDir)
         .select(col("event_id"), era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "45 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .dropDuplicatesWithinWatermark("event_id"))
     }
-    spark.table(run.sink)
+    spark.table(sink)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
@@ -3467,110 +2880,70 @@ object StreamingGate {
     * writer B replays WHOLE from a fresh checkpoint; the sink's
     * idempotent partition overwrite must leave the table unchanged. */
   def streamedConcurrentWriters(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.streaming.IdempotentParquetSink
-    val runA = new GateRun(spark, "q336a", Seq())
-    val runB = new GateRun(spark, "q336b", Seq())
     val table = "q336_shared_table"
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      // clear a previous JVM's surviving managed-table directory (the
-      // q280 lesson: the in-memory catalog forgets, the warehouse does
-      // not), and forget any stale sink validation for the name
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
-      IdempotentParquetSink.invalidate(spark, table)
-      val ev = spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"),
-          round(col("value") * 100).cast(LongType).as("cents"))
-      Seq((0, runA), (1, runB)).foreach { case (w, run) =>
-        (0 until 4).foreach { f =>
-          val stage = s"${run.srcDir}/stage_f$f"
-          ev.filter(col("event_id") % 2 === w &&
-              expr("(event_id div 2) % 4") === f)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-            p.toString.endsWith(".parquet")).findFirst().get())
-          val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-          Files.move(part, dest)
-          graft.core.DirIO.deleteRecursively(Paths.get(stage))
-          Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-              + f * 60000L))
+    GateRun.run(spark, "q336a", Seq()) { runA =>
+      GateRun.run(spark, "q336b", Seq()) { runB =>
+        dropManagedTable(spark, table)
+        // forget any stale sink validation for the name
+        IdempotentParquetSink.invalidate(spark, table)
+        val ev = spark.read.parquet(s"$dir/events.parquet")
+          .select(col("event_id"), col("event_type"),
+            round(col("value") * 100).cast(LongType).as("cents"))
+        Seq((0, runA), (1, runB)).foreach { case (w, run) =>
+          (0 until 4).foreach(f => run.stageFile(
+            ev.filter(col("event_id") % 2 === w &&
+              expr("(event_id div 2) % 4") === f), f"f$f%d.parquet", f))
         }
+        // Bootstrap: a zero-row write creates the table with the sink's
+        // batch_id-first partition spec and validates it, so neither
+        // writer hits the create-if-missing race.
+        IdempotentParquetSink.write(ev.limit(0), table, batchId = -1L)
+        val schema = StructType(Seq(
+          StructField("event_id", LongType),
+          StructField("event_type", StringType),
+          StructField("cents", LongType)))
+        def writer(srcDir: String, offset: Long) =
+          spark.newSession().readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(srcDir)
+            .writeStream
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              IdempotentParquetSink.write(batch, table, offset + id)
+            }
+        GateRun.drainAll(writer(runA.srcDir, 0L) -> runA.ckpt,
+          writer(runB.srcDir, 100L) -> runB.ckpt)
+        // The readers below run in the MAIN session while the writers
+        // wrote through their own sessions: the relation cache
+        // (SessionCatalog.tableRelationCache) is per-session, so refresh
+        // before every read or the main session serves a stale file
+        // listing of partitions the replay has since rewritten.
+        spark.catalog.refreshTable(table)
+        val c1 = spark.table(table).count()
+        // Replay writer B wholesale from a FRESH checkpoint (crash that
+        // lost the checkpoint but not the table): every B batch re-runs
+        // and must overwrite its own partition with identical rows.
+        val ckptB2 = Files.createTempDirectory("q336b_ckpt2")
+        try runB.drain(writer(runB.srcDir, 100L), ckptB2.toString)
+        finally DirIO.deleteRecursively(ckptB2)
+        spark.catalog.refreshTable(table)
+        val c2 = spark.table(table).count()
+        val out = spark.table(table)
+          .groupBy(col(IdempotentParquetSink.BatchCol).cast(LongType)
+            .as("batch_id"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("cents")).as("sum_cents"),
+            sum(col("event_id")).as("sum_eid"))
+          .select(col("batch_id"),
+            when(col("batch_id") >= 100L, lit("b")).otherwise(lit("a"))
+              .as("writer"),
+            col("n"), col("sum_cents"), col("sum_eid"),
+            lit(c2 - c1).as("replay_delta"))
+          .orderBy(col("batch_id"))
+          .localCheckpoint(false)
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        out
       }
-      // Bootstrap: a zero-row write creates the table with the sink's
-      // batch_id-first partition spec and validates it, so neither
-      // writer hits the create-if-missing race.
-      IdempotentParquetSink.write(ev.limit(0), table, batchId = -1L)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("event_type", StringType),
-        StructField("cents", LongType)))
-      def writer(sess: SparkSession, srcDir: String, ckpt: String,
-          offset: Long) =
-        sess.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            IdempotentParquetSink.write(batch, table, offset + id)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      val qa = writer(spark.newSession(), runA.srcDir, runA.ckpt, 0L)
-      val qb = writer(spark.newSession(), runB.srcDir, runB.ckpt, 100L)
-      try { qa.awaitTermination(); qb.awaitTermination() }
-      finally {
-        if (qa.isActive) qa.stop()
-        if (qb.isActive) qb.stop()
-      }
-      // The readers below run in the MAIN session while the writers
-      // wrote through their own sessions: the relation cache
-      // (SessionCatalog.tableRelationCache) is per-session, so refresh
-      // before every read or the main session serves a stale file
-      // listing of partitions the replay has since rewritten.
-      spark.catalog.refreshTable(table)
-      val c1 = spark.table(table).count()
-      // Replay writer B wholesale from a FRESH checkpoint (crash that
-      // lost the checkpoint but not the table): every B batch re-runs
-      // and must overwrite its own partition with identical rows.
-      val ckptB2 = Files.createTempDirectory("q336b_ckpt2").toString
-      val qb2 = writer(spark.newSession(), runB.srcDir, ckptB2, 100L)
-      try qb2.awaitTermination() finally {
-        if (qb2.isActive) qb2.stop()
-        graft.core.DirIO.deleteRecursively(Paths.get(ckptB2))
-      }
-      spark.catalog.refreshTable(table)
-      val c2 = spark.table(table).count()
-      val out = spark.table(table)
-        .groupBy(col(IdempotentParquetSink.BatchCol).cast(LongType)
-          .as("batch_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          sum(col("event_id")).as("sum_eid"))
-        .select(col("batch_id"),
-          when(col("batch_id") >= 100L, lit("b")).otherwise(lit("a"))
-            .as("writer"),
-          col("n"), col("sum_cents"), col("sum_eid"),
-          lit(c2 - c1).as("replay_delta"))
-        .orderBy(col("batch_id"))
-        .localCheckpoint(false)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      out
-    } finally {
-      // reverse construction order: each cleanup restores the
-      // shuffle-partition value its GateRun saved, so unwinding B then
-      // A leaves the session at the pre-gate setting
-      runB.cleanup()
-      runA.cleanup()
     }
   }
 }
