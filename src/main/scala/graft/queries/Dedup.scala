@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.{MinHashLSH, SimHash}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,7 +39,7 @@ object Dedup {
     * Measured pair-level cards: sf0.1 p=0.995 r=0.824 (q349: 0.992 /
     * 0.654), sf1 p=0.992 r=0.825 (q349: 0.100 flat). Pinned identically
     * in the engine expression and the DuckDB oracle replay. */
-  private val WeightedMatchT = "36000000000000000"
+  private[queries] val WeightedMatchT = "36000000000000000"
 
   /** The capped-blocking occupancy cap shared by every dynamic-blocking
     * ER gate (q325's probe, q349, q353) — the dynBlocks call, the
@@ -1757,7 +1757,7 @@ object Dedup {
           .select(col("pid"))
         val mp = lp.cand.join(broadcast(matchPids), Seq("pid"))
           .select(col("a_key"), col("b_key")).localCheckpoint(false)
-        erCapstoneCard(lp, grid8, mp)
+        erCapstoneCard(lp, mp)
       },
       oracle = Some(s"""
         WITH $linkageCtes,
@@ -2092,7 +2092,7 @@ object Dedup {
             col("cand_full"), col("max_occ_kept0"),
             col("max_occ_kept1"), col("max_occ_kept2"),
             col("n_purged_blocks"))
-        erCapstoneCardFromEdges(lp, grid8, edges, np)
+        erCapstoneCardFromEdges(lp, edges, np)
           .crossJoin(broadcast(certs))
           .select(col("n_records"), col("n_true_pairs"),
             col("n_match_pairs"), col("n_clusters"),
@@ -2225,7 +2225,6 @@ object Dedup {
       build = (spark, dir) => {
         val wp = weightedParts(spark, dir)
         val lp = wp.lp
-        val grid8 = lp.grid.localCheckpoint(false)
         val sc = wp.scored
         val edges = sc.filter(col("is_match"))
           .select((col("a_key") * 2).as("x"),
@@ -2247,37 +2246,30 @@ object Dedup {
               .otherwise(0L)), lit(0L)).as("n_allagree4_kept"))
           .localCheckpoint(false)
         val np = scal.select(col("n_match_pairs"))
-        // purge count read from the fused census statistic row (round
-        // 16) — identical to count(phPurged), minus one aggregation job
+        // stRow already counts the purged (nat, ph) blocks
         val aa = scal
           .select(col("n_cand_total"), col("n_allagree4"),
             col("n_allagree4_kept"))
           .crossJoin(broadcast(wp.stRow.select(col("n_purged_ph_blocks"))))
-        // Overlap independent certificate branches with the propagation
-        // loop (round 15; guide §2.6 "overlap independent jobs"): the
-        // card tail below runs ~4 eager jobs per propagation round on
-        // THIS thread, while the scalar census (scal), the FS grid
-        // (grid8) and the ph-purge count are independent of the loop —
-        // previously they materialized serially inside the final
-        // assembly job. Materialize the scored front ONCE first (its
-        // lazy-checkpoint blocks would otherwise be computed twice by
-        // the racing threads), then let FIFO scheduling backfill the
-        // loop's idle cores with the certificate jobs. Results are
-        // unchanged: these are the same frames, just materialized
-        // earlier on another thread.
+        // The card tail below runs ~4 eager jobs per propagation round on
+        // THIS thread; the scalar census (scal) is independent of the
+        // loop, so it materializes on another thread and FIFO scheduling
+        // backfills the loop's idle cores with it. The scored front is
+        // materialized ONCE first: its lazy-checkpoint blocks would
+        // otherwise be computed twice by the racing threads.
         sc.count()
         val bgErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
         val bg = new Thread(() => {
-          try { scal.count(); grid8.count() }
+          try scal.count()
           catch { case t: Throwable => bgErr.set(t) }
         })
         bg.setDaemon(true)
         bg.start()
-        // join in a finally (round 16, ADVICE r15 #4): if the card tail
-        // throws, the certificate thread must not keep submitting jobs
-        // against the shared session after the query has failed.
+        // join in a finally: if the card tail throws, the certificate
+        // thread must not keep submitting jobs against the shared session
+        // after the query has failed.
         val card =
-          try erCapstoneCardFromEdges(lp, grid8, edges, np)
+          try erCapstoneCardFromEdges(lp, edges, np)
           finally bg.join()
         val err = bgErr.get()
         if (err != null) throw err
@@ -2768,9 +2760,8 @@ object Dedup {
     * min on the MATCH graph (≈ true-pair cardinality, far below
     * candidate cardinality); B³ contingency aggs at cell cardinality.
     * No all-pairs stage. */
-  private def erCapstoneCard(lp: LinkageParts, grid8: DataFrame,
-      mp: DataFrame): DataFrame =
-    erCapstoneCardFromEdges(lp, grid8,
+  private def erCapstoneCard(lp: LinkageParts, mp: DataFrame): DataFrame =
+    erCapstoneCardFromEdges(lp,
       mp.select((col("a_key") * 2).as("x"), (col("b_key") * 2 + 1).as("y")),
       mp.agg(count(lit(1)).as("n_match_pairs")))
 
@@ -2779,7 +2770,7 @@ object Dedup {
     * `np` a 1-row n_match_pairs frame — q349 passes a SUPERNODE-reduced
     * graph (stars per all-agree clique) with the exact clique pair
     * count, so the propagation cost is ∝ members, not members². */
-  private def erCapstoneCardFromEdges(lp: LinkageParts, grid8: DataFrame,
+  private def erCapstoneCardFromEdges(lp: LinkageParts,
       edges: DataFrame, np0: DataFrame): DataFrame = {
     val nodes = lp.a
       .select((col("a_key") * 2).as("node"), col("a_key").as("truth"))
@@ -2871,7 +2862,7 @@ object Dedup {
         sum(when(col("is_l") === 0L && col("k") > 1L, 1L).otherwise(0L))
           .as("n_split_truths"))
     val np = np0
-    val tp = grid8.agg(max(col("n_true_total")).as("n_true_pairs"))
+    val tp = lp.nTrue.select(col("n_true_total").as("n_true_pairs"))
     card.crossJoin(broadcast(np)).crossJoin(broadcast(tp))
       .crossJoin(broadcast(mgsp))
       .select(col("n_records"), col("n_true_pairs"),
@@ -2905,20 +2896,18 @@ object Dedup {
     * agreement flags, capped/rescaled score `p5`, the prior-scaled
     * threshold `thr`, and `is_match`. */
   private[queries] final case class WeightedParts(lp: LinkageParts,
-      db: DynBlocks, scored: DataFrame, phPurged: DataFrame,
-      stRow: DataFrame)
+      db: DynBlocks, scored: DataFrame, stRow: DataFrame)
 
   private[queries] def weightedParts(spark: org.apache.spark.sql.SparkSession,
       dir: String): WeightedParts = {
-    val DecType = org.apache.spark.sql.types.DecimalType(38, 0)
     val lp = linkageParts(spark, dir)
     // Identifier enrichment — the measured answer to saturation (see
     // q353's docstring): a phone-last-4-grade 5th quasi-identifier
     // (simulated below), a-side clean, b-side noised at 10% with the
     // registry coin discipline. ph is a PURE FUNCTION of the entity key,
-    // so it is derived in-row on the staged registries (round-15 latency
-    // rework) — value-identical to the oracle's phf-join formulation but
-    // two broadcast-join stages cheaper.
+    // so it is derived in-row on the staged registries — value-identical
+    // to the oracle's phf-join formulation but two broadcast-join stages
+    // cheaper.
     //
     // The driver's customer table carries no phone column, so the 5th
     // identifier is SIMULATED with the exact information content of a
@@ -2926,9 +2915,8 @@ object Dedup {
     // be a non-linear keyed derivation (md5, the registry coin
     // discipline): a multiplicative hash mod 10^4 is linear in the key,
     // so ScaleFixtures' constant copy offsets made cross-copy twins
-    // collide on it deterministically (measured round 14: 287k aligned
-    // false all-agree-5 pairs at sf1; md5 restores the 1e-4 chance
-    // rate).
+    // collide on it deterministically (measured: 287k aligned false
+    // all-agree-5 pairs at sf1; md5 restores the 1e-4 chance rate).
     def phOf(key: String) =
       conv(substring(md5(concat(lit("q353ID#"),
         col(key).cast("string"))), 1, 12), 16, 10)
@@ -2943,50 +2931,23 @@ object Dedup {
           (phOf("b_key") + 1) % 10000L).otherwise(phOf("b_key")))
       .localCheckpoint(false)
     val db = dynBlocks(lp.a, lp.b, cap = BlockCap)
-    // Fused (nat, ph) block census + per-side field-value censuses
-    // (round 16, VERDICT r15 #2 — same lever as dynBlocks' all-level
-    // fusion): one melted pass over each enriched registry computes the
-    // second blocking pass AND the five-field value census in ONE
-    // exchange + ONE checkpointed frame, replacing three (blkP, fa, fb).
-    // Each row explodes into its (nat, ph) block row plus five
-    // (field, value) rows; per-side counts come from the same
-    // conditional sums the old separate censuses took. Slices below are
-    // value-identical to the old frames: blkP keeps groups present on
-    // BOTH sides (the old inner-census filter), fa/fb keep any group
-    // present on THEIR side (a value occurring on a side always has a
-    // nonzero count there).
+    // One census carries the (nat, ph) blocks (lv 3) and the five
+    // per-side field-value counts (lv 4). blkP keeps groups present on
+    // BOTH sides; fa/fb keep any group present on THEIR side.
     val PhKeys = Seq("nat", "ph")
     val nulS = lit(null).cast("string")
     val nulL = lit(null).cast("long")
-    def meltW(df: DataFrame, isA: Long) = df.select(
-      explode(array(
-        struct(lit(3).as("lv"), col("nat"), col("ph"),
-          nulS.as("f"), nulS.as("v")),
-        struct(lit(4).as("lv"), nulL.as("nat"), nulL.as("ph"),
-          lit("nat").as("f"), col("nat").cast("string").as("v")),
-        struct(lit(4).as("lv"), nulL.as("nat"), nulL.as("ph"),
-          lit("seg").as("f"), col("seg").as("v")),
-        struct(lit(4).as("lv"), nulL.as("nat"), nulL.as("ph"),
-          lit("band").as("f"), col("band").cast("string").as("v")),
-        struct(lit(4).as("lv"), nulL.as("nat"), nulL.as("ph"),
-          lit("tok").as("f"), col("tok").cast("string").as("v")),
-        struct(lit(4).as("lv"), nulL.as("nat"), nulL.as("ph"),
-          lit("ph").as("f"), col("ph").cast("string").as("v")))).as("m"),
-      lit(isA).as("is_a"))
-      .select(col("m.lv").as("lv"), col("m.nat").as("nat"),
-        col("m.ph").as("ph"), col("m.f").as("f"), col("m.v").as("v"),
-        col("is_a"))
-    val censW = meltW(aw, 1L).unionAll(meltW(bw, 0L))
-      .groupBy(col("lv"), col("nat"), col("ph"), col("f"), col("v"))
-      .agg(sum(col("is_a")).as("cnt_a"),
-        sum(lit(1L) - col("is_a")).as("cnt_b"))
+    def fieldRow(f: String) = struct(lit(4).as("lv"), nulL.as("nat"),
+      nulL.as("ph"), lit(f).as("f"), col(f).cast("string").as("v"))
+    val censW = sideCensus(aw, bw,
+      struct(lit(3).as("lv"), col("nat"), col("ph"), nulS.as("f"),
+        nulS.as("v")) +: Seq("nat", "seg", "band", "tok", "ph").map(fieldRow))
       .localCheckpoint(false)
     val blkP = censW.filter(col("lv") === 3 &&
         col("cnt_a") > 0L && col("cnt_b") > 0L)
       .select(col("nat"), col("ph"), col("cnt_a"), col("cnt_b"))
       .withColumn("occ", greatest(col("cnt_a"), col("cnt_b")))
     val keepP = blkP.filter(col("occ") <= BlockCap)
-    val phPurged = blkP.filter(col("occ") > BlockCap)
     val fa = censW.filter(col("lv") === 4 && col("cnt_a") > 0L)
       .select(col("f"), col("v"), col("cnt_a").as("c"))
     val fb = censW.filter(col("lv") === 4 && col("cnt_b") > 0L)
@@ -3005,55 +2966,11 @@ object Dedup {
       s"LEAST(CAST($cap AS BIGINT)," +
         s" CAST(CAST(900000 AS DECIMAL(38,0)) * nab" +
         s" div (CAST(ca_$f AS DECIMAL(38,0)) * cb_$f) AS BIGINT))")
-    // ALL the u statistics + the ph purge count from ONE aggregation
-    // over the fused census (round 16; guide §2.4): stRow previously
-    // pulled nab/n_a/n_b/f_tok_d/f_band_d from lp.st — whose melt
-    // censuses + FULL OUTER join re-ran inside stRow's materialization
-    // even though grid8 computes the same subtree for the card — and
-    // joined a second census slice (sNew) for the seg/ph statistics.
-    // censW already carries every per-side value count over the SAME
-    // registry rows (aw/bw = a/b + the derived ph column), so one pass
-    // reads them all. Value identity, term by term:
-    //   - s_f = Σ cnt_a·cnt_b over f's value rows ≡ the old inner-join
-    //     sum (a value missing on either side contributes 0 here and was
-    //     dropped by the join there);
-    //   - n_a/n_b = Σ cnt over the "tok" rows (every registry row has
-    //     exactly one tok) ≡ lp.st's census totals;
-    //   - f_*_d / nab / thr reproduce lp.st's expressions verbatim;
-    //   - n_purged_ph_blocks counts lv-3 both-side groups with
-    //     occ > cap ≡ count(phPurged), fused here so q353's certificate
-    //     does not need a separate aggregation job.
-    val stRow = censW
-      .agg(
-        coalesce(sum(when(col("f") === "tok",
-          col("cnt_a").cast(DecType) * col("cnt_b"))),
-          lit(0L).cast(DecType)).as("s_tok"),
-        coalesce(sum(when(col("f") === "band",
-          col("cnt_a").cast(DecType) * col("cnt_b"))),
-          lit(0L).cast(DecType)).as("s_band"),
-        sum(when(col("f") === "seg",
-          col("cnt_a").cast(DecType) * col("cnt_b"))).as("s_seg2"),
-        sum(when(col("f") === "ph",
-          col("cnt_a").cast(DecType) * col("cnt_b"))).as("s_ph"),
-        sum(when(col("f") === "tok", col("cnt_a"))).as("n_a"),
-        sum(when(col("f") === "tok", col("cnt_b"))).as("n_b"),
+    val stRow = uStats(censW, Seq("tok", "band", "seg", "ph"),
         sum(when(col("lv") === 3 && col("cnt_a") > 0L &&
           col("cnt_b") > 0L &&
           greatest(col("cnt_a"), col("cnt_b")) > BlockCap, 1L)
           .otherwise(0L)).as("n_purged_ph_blocks"))
-      .withColumn("nab", (col("n_a").cast(DecType) * col("n_b")).cast(DecType))
-      .withColumn("f_tok_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_tok) AS BIGINT)"))
-      .withColumn("f_band_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_band) AS BIGINT)"))
-      .withColumn("f_seg_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_seg2) AS BIGINT)"))
-      .withColumn("f_ph_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_ph) AS BIGINT)"))
       .withColumn("thr", expr(s"CAST($WeightedMatchT AS DECIMAL(38,0))" +
         " * GREATEST(n_a, n_b)"))
       .select(col("nab"), col("f_tok_d"), col("f_band_d"),
@@ -3082,14 +2999,14 @@ object Dedup {
     }
     val awc = counted(aw, fa, "ca").localCheckpoint(false)
     val bwc = counted(bw, fb, "cb").localCheckpoint(false)
-    // Scoring runs IN-ROW at pair-generation time (round-15 scale
-    // rework): each blocking pass joins the count-augmented registries,
-    // so the pair's five agreement flags and its full factor product
-    // compute inside the generating join's codegen stage and the wide
-    // per-pair payload NEVER shuffles — the sf1 rehearsal of the first
-    // (dedup-then-reattach) form measured the re-attachment join
-    // shuffling a 770k-row wide intermediate (~150 MB read+write sum at
-    // sf1) once the registry side outgrew the broadcast threshold.
+    // Scoring runs IN-ROW at pair-generation time: each blocking pass
+    // joins the count-augmented registries, so the pair's five agreement
+    // flags and its full factor product compute inside the generating
+    // join's codegen stage and the wide per-pair payload NEVER shuffles
+    // — the sf1 rehearsal of the first (dedup-then-reattach) form
+    // measured the re-attachment join shuffling a 770k-row wide
+    // intermediate (~150 MB read+write sum at sf1) once the registry side
+    // outgrew the broadcast threshold.
     def scoreFrame(pairs: DataFrame) = pairs
       .crossJoin(broadcast(stRow))
       .withColumn("g_seg",
@@ -3161,7 +3078,55 @@ object Dedup {
       .unionAll(pP.join(p012.select(col("a_key"), col("b_key")),
         Seq("a_key", "b_key"), "left_anti"))
       .localCheckpoint(false)
-    WeightedParts(lp, db, scored, phPurged, stRow)
+    WeightedParts(lp, db, scored, stRow)
+  }
+
+  /** Per-side census: every row of `a` and of `b` explodes into the
+    * structs `rows` (one field list for all of them), and ONE groupBy over
+    * those fields counts each group's rows per side as `cnt_a`/`cnt_b`. A
+    * group seen on one side only carries a 0 count for the other, so
+    * Σ cnt_a·cnt_b over a field's values equals the inner-join sum over
+    * values present on both sides — provided no registry value is null
+    * (a join drops null = null, a groupBy keeps it as a group); the TPC-H
+    * `customer` columns the registries derive from are NOT NULL. */
+  private def sideCensus(a: DataFrame, b: DataFrame,
+      rows: Seq[Column]): DataFrame = {
+    def melt(df: DataFrame, isA: Long) =
+      df.select(explode(array(rows: _*)).as("m"), lit(isA).as("is_a"))
+        .select(col("m.*"), col("is_a"))
+    val ma = melt(a, 1L)
+    ma.unionAll(melt(b, 0L))
+      .groupBy(ma.columns.filter(_ != "is_a").map(col).toSeq: _*)
+      .agg(sum(col("is_a")).as("cnt_a"),
+        sum(lit(1L) - col("is_a")).as("cnt_b"))
+  }
+
+  /** Fellegi–Sunter u statistics over a [[sideCensus]] of (f, v) rows, in
+    * ONE aggregation (`extra` aggregates ride the same pass): n_a/n_b are
+    * the per-side totals of `fields.head`, which equal the registry sizes
+    * because every row carries exactly one value per field; nab = n_a·n_b;
+    * s_f = Σ cnt_a·cnt_b over f's values (rows whose `f` is not in
+    * `fields` fall out of every sum); and the integer-ppm agreement and
+    * disagreement factors f_f_a = 0.9·nab div s_f and
+    * f_f_d = 0.1·nab div (nab − s_f). */
+  private def uStats(census: DataFrame, fields: Seq[String],
+      extra: Column*): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    def onF(f: String, c: Column) = sum(when(col("f") === f, c))
+    val aggs = fields.map(f => coalesce(
+        onF(f, col("cnt_a").cast(dec) * col("cnt_b")), lit(0L).cast(dec))
+        .as(s"s_$f")) ++
+      Seq(onF(fields.head, col("cnt_a")).as("n_a"),
+        onF(fields.head, col("cnt_b")).as("n_b")) ++ extra
+    val st = census.agg(aggs.head, aggs.tail: _*)
+      .withColumn("nab", (col("n_a").cast(dec) * col("n_b")).cast(dec))
+    fields.foldLeft(st) { (df, f) =>
+      df.withColumn(s"f_${f}_a", expr(
+          s"CAST(CAST(900000 AS DECIMAL(38,0)) * nab div s_$f AS BIGINT)"))
+        .withColumn(s"f_${f}_d", expr(
+          "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
+            s" div (nab - s_$f) AS BIGINT)"))
+    }
   }
 
   private[queries] val DynKeys0 = Seq("nat", "seg")
@@ -3170,43 +3135,21 @@ object Dedup {
 
   private[queries] def dynBlocks(a: DataFrame, b: DataFrame,
       cap: Long): DynBlocks = {
-    // ALL-LEVEL census fusion (round 16, VERDICT r15 #2; guide §2.4
-    // "remove shuffles outright"): the three per-level censuses used to
-    // be three separate union+groupBy exchanges, each lazily
-    // checkpointed — at sf0.1 the q353/q349 walls are AQE stage-launch
-    // latency, so every removed exchange removes jobs from the critical
-    // path. One melted pass computes every level at once: each registry
-    // row explodes into its three (level, key-prefix) census rows and
-    // ONE groupBy counts them all. Value identity per level:
-    //   - level 0 groups are exactly census(a, b, (nat,seg));
-    //   - a level-1 group's count over ALL of a equals its count over
-    //     a1 = a ⋈ split0 whenever (nat,seg) ∈ split0, because
-    //     membership in the group fixes (nat,seg) — so blk1 ≡ the
-    //     level-1 slice semi-joined to split0 (and blk2 likewise via
-    //     split1). Groups outside split0/split1 are filtered out by the
-    //     same broadcast join that used to restrict a1/b1/a2/b2.
-    // The cnt_a > 0 AND cnt_b > 0 filter reproduces the old INNER
-    // census join: blocks present on only one side never appear.
-    // Shuffle bytes: the single exchange carries the partially
-    // aggregated (level, keys) groups — the same distinct-group mass
-    // the three exchanges carried, in one stage.
+    // One census counts every level: each registry row explodes into its
+    // three (level, key-prefix) rows. A level-1 group's count over ALL of
+    // a equals its count over a1 = a ⋈ split0 whenever (nat,seg) ∈
+    // split0, because membership in the group fixes (nat,seg) — so blk1 ≡
+    // the level-1 slice semi-joined to split0 (and blk2 likewise via
+    // split1). The cnt_a > 0 AND cnt_b > 0 filter keeps blocks present on
+    // both sides.
     val nulL = lit(null).cast("long")
-    def melt(df: DataFrame, isA: Long) = df.select(
-      explode(array(
+    val cens = sideCensus(a, b, Seq(
         struct(lit(0).as("lv"), col("nat"), col("seg"),
           nulL.as("band"), nulL.as("tok")),
         struct(lit(1).as("lv"), col("nat"), col("seg"),
           col("band"), nulL.as("tok")),
         struct(lit(2).as("lv"), col("nat"), col("seg"),
-          col("band"), col("tok")))).as("m"),
-      lit(isA).as("is_a"))
-      .select(col("m.lv").as("lv"), col("m.nat").as("nat"),
-        col("m.seg").as("seg"), col("m.band").as("band"),
-        col("m.tok").as("tok"), col("is_a"))
-    val cens = melt(a, 1L).unionAll(melt(b, 0L))
-      .groupBy(col("lv"), col("nat"), col("seg"), col("band"), col("tok"))
-      .agg(sum(col("is_a")).as("cnt_a"),
-        sum(lit(1L) - col("is_a")).as("cnt_b"))
+          col("band"), col("tok"))))
       .filter(col("cnt_a") > 0L && col("cnt_b") > 0L)
       .withColumn("occ", greatest(col("cnt_a"), col("cnt_b")))
       .localCheckpoint(false)
@@ -3231,11 +3174,13 @@ object Dedup {
 
   /** Shared output of the q302/q325 Fellegi–Sunter linkage builder:
     * the two noisy registries, the blocked candidate pairs (agreement
-    * flags + pattern id), and the 8-row scored pattern grid with
-    * decisions — one construction, two gates, so the capstone cannot
-    * drift from the pairwise gate's registries or scoring. */
+    * flags + pattern id), the 8-row scored pattern grid with
+    * decisions, its 1-row u-statistic frame `st`, and the 1-row
+    * `n_true_total` frame `nTrue` (|a ⋈ b| on the entity key) — one
+    * construction, so the capstones cannot drift from the pairwise
+    * gate's registries or scoring. */
   private[queries] final case class LinkageParts(a: DataFrame, b: DataFrame,
-      cand: DataFrame, grid: DataFrame, st: DataFrame)
+      cand: DataFrame, grid: DataFrame, st: DataFrame, nTrue: DataFrame)
 
   /** q302/q325's shared linkage front: md5-coin field noise over
     * `customer`, two-pass blocking, frequency-based u statistics, and
@@ -3243,8 +3188,6 @@ object Dedup {
     * full derivation). */
   private[queries] def linkageParts(spark: org.apache.spark.sql.SparkSession,
       dir: String): LinkageParts = {
-    import org.apache.spark.sql.types.DecimalType
-    val dec = DecimalType(38, 0)
     def coin(salt: String) =
       conv(substring(md5(concat(lit(salt),
         col("k").cast("string"))), 1, 12), 16, 10)
@@ -3256,9 +3199,9 @@ object Dedup {
         " div 50000").as("band"),
       col("c_mktsegment").as("seg"),
       (col("c_custkey") % 1000L).as("tok"))
-    // Spread policy (round 14, VERDICT r13 #1): size the registry spread
-    // to ~2k rows/partition instead of blindly using the session
-    // parallelism. The ER composition runs ~30 tiny stages over these
+    // Spread policy: size the registry spread to ~2k rows/partition
+    // instead of blindly using the session parallelism. The ER
+    // composition runs ~30 tiny stages over these
     // frames; at sf0.1 (13.5k rows) a 32-way spread means every stage
     // launches 32 near-empty tasks and task-launch latency dominates
     // (measured: 9.6 s → 6.6 s at sf0.1 from this change alone). At
@@ -3322,50 +3265,14 @@ object Dedup {
     val cand = proj(r1).union(proj(r2)).distinct()
       .withColumn("pid",
         col("g_tok") * 4 + col("g_seg") * 2 + col("g_band"))
-    // u-statistic fusion (round 14, VERDICT r13 #1): the three per-field
-    // frequency passes (each 2 groupBys + join + agg + crossJoin) melt
-    // into ONE census — explode each registry row into (field, value)
-    // pairs, count per side, FULL OUTER join the sides, and read every
-    // scalar from a single aggregate. Values are identical: s_field sums
-    // ca*cb over values present on BOTH sides (null products drop out of
-    // SUM, reproducing the inner join), and n_a/n_b are the per-side
-    // census totals of any one field (every row carries one tok).
-    def melt(df: DataFrame) = df.select(
-      explode(map(
-        lit("tok"), col("tok").cast("string"),
-        lit("seg"), col("seg"),
-        lit("band"), col("band").cast("string"))).as(Seq("f", "v")))
-    val fa = melt(a).groupBy(col("f"), col("v"))
-      .agg(count(lit(1)).as("ca"))
-    val fb = melt(b).groupBy(col("f"), col("v"))
-      .agg(count(lit(1)).as("cb"))
-    def sOf(field: String) =
-      coalesce(sum(when(col("f") === field,
-        col("ca").cast(dec) * col("cb"))), lit(0L).cast(dec))
-    val freqs = fa.join(fb, Seq("f", "v"), "full_outer")
-      .agg(sOf("tok").as("s_tok"), sOf("seg").as("s_seg"),
-        sOf("band").as("s_band"),
-        sum(when(col("f") === "tok", col("ca"))).as("n_a"),
-        sum(when(col("f") === "tok", col("cb"))).as("n_b"))
-    val st = freqs
-      .crossJoin(broadcast(a.join(b, col("a_key") === col("b_key"))
-        .agg(count(lit(1)).as("n_true_total"))))
-      .withColumn("nab", (col("n_a").cast(dec) * col("n_b")).cast(dec))
-      .withColumn("f_tok_a", expr(
-        "CAST(CAST(900000 AS DECIMAL(38,0)) * nab div s_tok AS BIGINT)"))
-      .withColumn("f_tok_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_tok) AS BIGINT)"))
-      .withColumn("f_seg_a", expr(
-        "CAST(CAST(900000 AS DECIMAL(38,0)) * nab div s_seg AS BIGINT)"))
-      .withColumn("f_seg_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_seg) AS BIGINT)"))
-      .withColumn("f_band_a", expr(
-        "CAST(CAST(900000 AS DECIMAL(38,0)) * nab div s_band AS BIGINT)"))
-      .withColumn("f_band_d", expr(
-        "CAST(CAST(100000 AS DECIMAL(38,0)) * nab" +
-          " div (nab - s_band) AS BIGINT)"))
+    val census = sideCensus(a, b, Seq(
+      struct(lit("tok").as("f"), col("tok").cast("string").as("v")),
+      struct(lit("seg").as("f"), col("seg").as("v")),
+      struct(lit("band").as("f"), col("band").cast("string").as("v"))))
+    val nTrue = a.join(b, col("a_key") === col("b_key"))
+      .agg(count(lit(1)).as("n_true_total"))
+    val st = uStats(census, Seq("tok", "seg", "band"))
+      .crossJoin(broadcast(nTrue))
     val gridBase = spark.range(8).select(col("id").as("pid"),
       expr("id div 4 % 2").as("g_tok"),
       expr("id div 2 % 2").as("g_seg"),
@@ -3384,7 +3291,7 @@ object Dedup {
         when(col("score_ppm12") >= 64000000000000L, "match")
           .when(col("score_ppm12") >= 1000000000000L, "possible")
           .otherwise("non_match"))
-    LinkageParts(a, b, cand, grid, st)
+    LinkageParts(a, b, cand, grid, st, nTrue)
   }
 
   /** q320's chrF² scorer over (ptype, doc_id, ref, hyp) pairs: clipped

@@ -58,6 +58,72 @@ class Round14PropertySpec extends SparkSpec {
     }
   }
 
+  test("ER u statistics equal a plain-Scala recount of the registries") {
+    // lp.st (q302/q325) and stRow (q353) both come from the Spark census
+    // and u-statistic helpers; here every value is recounted in plain
+    // Scala from the collected registries, with ph rebuilt from its md5
+    // definition rather than read back from Spark
+    val wp = Dedup.weightedParts(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame, key: String) =
+      df.select(col(key), col("nat"), col("seg"), col("band"), col("tok"))
+        .collect().map(r => (r.getAs[Number](0).longValue, r.getLong(1),
+          r.getString(2), r.getLong(3), r.getLong(4))).toSeq
+    val a = rows(wp.lp.a, "a_key")
+    val b = rows(wp.lp.b, "b_key")
+    def md5Mod(salt: String, k: Long, m: Long): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest((salt + k).getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.take(12), 16) % m
+    }
+    val phA = a.map(r => md5Mod("q353ID#", r._1, 10000L))
+    val phB = b.map { r =>
+      val ph = md5Mod("q353ID#", r._1, 10000L)
+      if (md5Mod("q353P#", r._1, 1000000L) < 100000L) (ph + 1) % 10000L
+      else ph
+    }
+    val (nA, nB) = (BigInt(a.size), BigInt(b.size))
+    val nab = nA * nB
+    def counts[T](xs: Seq[T]): Map[T, Int] =
+      xs.groupBy(identity).map(kv => kv._1 -> kv._2.size)
+    def s[T](va: Seq[T], vb: Seq[T]): BigInt = {
+      val cb = counts(vb)
+      counts(va).toSeq.map { case (v, n) =>
+        BigInt(n) * BigInt(cb.getOrElse(v, 0)) }.sum
+    }
+    val sF = Map(
+      "tok" -> s(a.map(_._5), b.map(_._5)),
+      "seg" -> s(a.map(_._3), b.map(_._3)),
+      "band" -> s(a.map(_._4), b.map(_._4)),
+      "ph" -> s(phA, phB))
+    def fA(f: String) = (BigInt(900000) * nab / sF(f)).toLong
+    def fD(f: String) = (BigInt(100000) * nab / (nab - sF(f))).toLong
+
+    val st = wp.lp.st.head()
+    assert(st.getAs[Long]("n_a") == nA.toLong)
+    assert(st.getAs[Long]("n_b") == nB.toLong)
+    Seq("tok", "seg", "band").foreach { f =>
+      assert(BigInt(st.getAs[java.math.BigDecimal](s"s_$f")
+        .toBigIntegerExact) == sF(f), s"s_$f")
+      assert(st.getAs[Long](s"f_${f}_a") == fA(f), s"f_${f}_a")
+      assert(st.getAs[Long](s"f_${f}_d") == fD(f), s"f_${f}_d")
+    }
+
+    val purged = {
+      val blkA = counts(a.map(_._2).zip(phA))
+      val blkB = counts(b.map(_._2).zip(phB))
+      blkA.count { case (k, ca) =>
+        blkB.get(k).exists(cb => math.max(ca, cb) > Dedup.BlockCap) }
+    }
+    val row = wp.stRow.head()
+    assert(BigInt(row.getAs[java.math.BigDecimal]("nab")
+      .toBigIntegerExact) == nab)
+    Seq("tok", "seg", "band", "ph").foreach(f =>
+      assert(row.getAs[Long](s"f_${f}_d") == fD(f), s"stRow f_${f}_d"))
+    assert(BigInt(row.getAs[java.math.BigDecimal]("thr").toBigIntegerExact) ==
+      BigInt(Dedup.WeightedMatchT) * nA.max(nB))
+    assert(row.getAs[Long]("n_purged_ph_blocks") == purged.toLong)
+  }
+
   test("q349 early-exit law: the first 0-change round is the fixed point") {
     // monotone min-label propagation on random graphs: once a round
     // changes nothing, further rounds change nothing, and the labels

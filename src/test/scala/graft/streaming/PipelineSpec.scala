@@ -124,6 +124,7 @@ class PipelineSpec extends SparkSpec {
     val in = tmpDir("gps-obs-in")
     val table = "gps_obs_main"
     val qt = "gps_obs_bad"
+    val table2 = "gps_obs_default"
     GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 100, files = 1)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(in).resolve("bad.json"),
@@ -139,9 +140,33 @@ class PipelineSpec extends SparkSpec {
       assert(metrics.nonEmpty, "no observed metrics in progress events")
       assert(metrics.map(_.getAs[Long]("rows_in")).sum == 101)
       assert(metrics.map(_.getAs[Long]("rows_bad")).sum == 1)
+
+      // Default config (no quarantine) over the good file plus a
+      // zero-record file, one file per batch, the empty file first: each
+      // row read is counted once, and the empty batch appends no rows.
+      val empty = java.nio.file.Paths.get(in).resolve("empty/part-empty.json")
+      java.nio.file.Files.createDirectories(empty.getParent)
+      java.nio.file.Files.write(empty, Array.emptyByteArray)
+      java.nio.file.Files.setLastModifiedTime(empty,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
+      val q2 = MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
+        inputDir = s"$in/{good/*,empty/*}",
+        checkpointDir = tmpDir("gps-obs-ckpt2"), table = table2,
+        maxFilesPerTrigger = 1, processingInterval = None))
+      q2.awaitTermination()
+      val progress = q2.recentProgress.toSeq
+      assert(progress.size == 2, s"expected one batch per file: $progress")
+      val rowsIn = progress
+        .flatMap(p => Option(p.observedMetrics.get("ingest_metrics")))
+        .map(_.getAs[Long]("rows_in"))
+      assert(rowsIn.sum == 100, s"rows_in per batch: $rowsIn")
+      assert(progress.map(_.numInputRows).sum == 100)
+      spark.catalog.refreshTable(table2)
+      assert(spark.table(table2).count() == 100)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS $qt")
+      spark.sql(s"DROP TABLE IF EXISTS $table2")
     }
   }
 
